@@ -118,7 +118,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // SPARK_GRAFT_BENCH_SKIP: comma-separated query names to EXCLUDE from
     // the run, itemized in the record as "skipped". Exists for the sf10
     // tier, where q22/q24's priced pre-flight refusals (DedupOps mass

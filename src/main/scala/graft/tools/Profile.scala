@@ -21,8 +21,10 @@ object Profile {
       inputB: Long)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.buffer.pageSize", sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "1m"))
@@ -68,7 +70,7 @@ object Profile {
       }
       val totRun = stages.valuesIterator.map(_.runMs).sum
       val totCpu = stages.valuesIterator.map(_.cpuMs).sum
-      println(f"TOTAL runMs=$totRun cpuMs=$totCpu (wall ${wall * 1000}%.0f ms; sched/plan gap = ${wall * 1000 - totRun / 32.0}%.0f ms if perfectly parallel)")
+      println(f"TOTAL runMs=$totRun cpuMs=$totCpu (wall ${wall * 1000}%.0f ms; sched/plan gap = ${wall * 1000 - totRun.toDouble / cpus}%.0f ms if perfectly parallel)")
       graft.engine.Hygiene.sweep(spark, gc = true)
     }
     spark.stop()

@@ -2,6 +2,7 @@ package graft
 
 import graft.engine.Semantics
 import graft.plans.SargableTimestampRules
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -12,11 +13,7 @@ class SargableTimestampSpec extends SparkSpec {
 
   private def withNanoParquet(test: String => Unit): Unit = {
     val dir = Files.createTempDirectory("sarg").toFile.getAbsolutePath
-    // raw int64 nanos, one row per hour across three days + pre-epoch edge
-    val day = 86400L * 1000000000L
-    val rows = (0 until 72).map(h => (h.toLong, 19700L * day + h * 3600L * 1000000000L)) :+
-      (999L, -1234567890L)
-    rows.toDF("id", "ts_ns").write.mode("overwrite").parquet(dir)
+    SargableTimestampSpec.writeNanos(spark, dir, "ts_ns")
     test(dir)
   }
 
@@ -57,11 +54,7 @@ class SargableTimestampSpec extends SparkSpec {
   // reaches the native NTZ parquet column.
   private def withMicroParquet(test: String => Unit): Unit = {
     val dir = Files.createTempDirectory("sargus").toFile.getAbsolutePath
-    val rows = (0 until 72).map { h =>
-      (h.toLong, java.time.LocalDateTime.ofEpochSecond(
-        19700L * 86400L + h * 3600L, 0, java.time.ZoneOffset.UTC))
-    }
-    rows.toDF("id", "ts").write.mode("overwrite").parquet(dir)
+    SargableTimestampSpec.writeMicros(spark, dir)
     test(dir)
   }
 
@@ -82,5 +75,29 @@ class SargableTimestampSpec extends SparkSpec {
       assert(physical.contains("LessThan(ts"),
         s"expected pushed ts upper bound in:\n$physical")
     }
+  }
+}
+
+/** The two physical stamps of the `events.ts` column, shared with
+  * [[TablesSchemaSpec]]. Both hold the same 72 hourly instants across days
+  * 19700-19702 since the epoch, ids 0-71. */
+object SargableTimestampSpec {
+  /** Raw int64 nanos in `column` — what `nanosAsLong` reads a
+    * TIMESTAMP(NANOS) column as — plus a pre-epoch edge row (id 999). */
+  def writeNanos(spark: SparkSession, dir: String, column: String): Unit = {
+    val day = 86400L * 1000000000L
+    val rows = (0 until 72).map(h => (h.toLong, 19700L * day + h * 3600L * 1000000000L)) :+
+      (999L, -1234567890L)
+    spark.createDataFrame(rows).toDF("id", column).write.mode("overwrite").parquet(dir)
+  }
+
+  /** TIMESTAMP(MICROS) with isAdjustedToUTC=false in `ts`, read back as
+    * TIMESTAMP_NTZ. */
+  def writeMicros(spark: SparkSession, dir: String): Unit = {
+    val rows = (0 until 72).map { h =>
+      (h.toLong, java.time.LocalDateTime.ofEpochSecond(
+        19700L * 86400L + h * 3600L, 0, java.time.ZoneOffset.UTC))
+    }
+    spark.createDataFrame(rows).toDF("id", "ts").write.mode("overwrite").parquet(dir)
   }
 }
